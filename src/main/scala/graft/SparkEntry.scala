@@ -1258,12 +1258,13 @@ object SparkEntry {
 
     // r11: MMR diversity re-ranking between retrieval and consumption
     // — candidates from the exact yardstick retriever, then the
-    // greedy lambda*rel - (1-lambda)*max-sim-to-picked chain (k
-    // distributed rounds over ALL queries at once, never per-query
-    // loops). The oracle replays the greedy chain unrolled. lambda =
-    // 0.5: both weights are EXACT in binary, so Spark's lit(1.0 -
-    // lambda) and the oracle's (1.0 - 0.5) are the same double and
-    // near-tie argmax decisions cannot diverge on literal rounding
+    // greedy lambda*rel - (1-lambda)*max-sim-to-picked chain (one
+    // grouped pass: each query's pool re-ranks inside its group, so
+    // the job count does not grow with k). The oracle replays the
+    // greedy chain unrolled. lambda = 0.5: both weights are EXACT in
+    // binary, so the kernel's (1.0 - lambda) and the oracle's
+    // (1.0 - 0.5) are the same double and near-tie argmax decisions
+    // cannot diverge on literal rounding
     "mmr1_diversified_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val cand = Similarity.bruteForceTopK(e.filter("vec_id < 10"), e,

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
@@ -29,6 +29,33 @@ object VectorExpressions {
     case _ => false
   }
 
+  private def getDouble(arr: ArrayData, et: DataType, i: Int): Double = et match {
+    case DoubleType => arr.getDouble(i)
+    case FloatType => arr.getFloat(i).toDouble
+    case LongType => arr.getLong(i).toDouble
+    case IntegerType => arr.getInt(i).toDouble
+    case ShortType => arr.getShort(i).toDouble
+    case ByteType => arr.getByte(i).toDouble
+    case other => throw new IllegalStateException(s"unreachable: $other")
+  }
+
+  /** The interpreted dot kernel: Σ x(i)*y(i) accumulated in index
+    * order over min(|x|,|y|) elements, null elements skipped. Shared
+    * by [[DotProduct]] (whose codegen emits the same loop) and
+    * [[MmrOrder]], so both produce bit-identical doubles. */
+  private[graft] def dot(x: ArrayData, xt: DataType,
+      y: ArrayData, yt: DataType): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i))
+        acc += getDouble(x, xt, i) * getDouble(y, yt, i)
+      i += 1
+    }
+    acc
+  }
+
   /** Σ a(i)*b(i) over two numeric array columns (double result; double
     * accumulation — exact for integer payloads within 2^53). Walks
     * min(|a|,|b|) elements; null elements contribute 0.
@@ -48,30 +75,9 @@ object VectorExpressions {
     private def elemType(e: Expression): DataType =
       e.dataType.asInstanceOf[ArrayType].elementType
 
-    private def getDouble(arr: ArrayData, et: DataType, i: Int): Double = et match {
-      case DoubleType => arr.getDouble(i)
-      case FloatType => arr.getFloat(i).toDouble
-      case LongType => arr.getLong(i).toDouble
-      case IntegerType => arr.getInt(i).toDouble
-      case ShortType => arr.getShort(i).toDouble
-      case ByteType => arr.getByte(i).toDouble
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
-
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val lt = elemType(left); val rt = elemType(right)
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        if (!x.isNullAt(i) && !y.isNullAt(i))
-          acc += getDouble(x, lt, i) * getDouble(y, rt, i)
-        i += 1
-      }
-      acc
-    }
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      dot(a.asInstanceOf[ArrayData], elemType(left),
+        b.asInstanceOf[ArrayData], elemType(right))
 
     private def genGet(arr: String, et: DataType, i: String): String = et match {
       case DoubleType => s"$arr.getDouble($i)"
@@ -103,6 +109,83 @@ object VectorExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): DotProduct =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** Greedy Maximal Marginal Relevance order over ONE query's
+    * candidate pool — the per-group kernel of
+    * [[graft.operators.Retrieval.mmrRerank]]. `child` is
+    * array<struct<id, rel: double, vec: array<numeric>, nrm: double>>
+    * sorted by id, so index order is id order and copies of one id
+    * are adjacent. Emits up to `k` distinct ids: the first by `rel`,
+    * each later one by `lambda*rel - (1-lambda)*msim`, where msim is
+    * the max cosine `dot/(nrm*nrm')` to the ids picked so far. Each
+    * candidate's msim is folded only against the newest pick, so a
+    * pool of P costs k*P dot products.
+    *
+    * Orders exactly as Spark's window and `max` do: scores desc with
+    * nulls last, NaN greatest, -0.0 equal to 0.0
+    * (`SQLOrderingUtil.compareDoubles`), ties to the smaller id. Every
+    * vector read must be non-null (the caller checks coverage when
+    * k >= 2; k = 1 reads none). */
+  private[graft] case class MmrOrder(child: Expression, k: Int,
+      lambda: Double) extends UnaryExpression with CodegenFallback {
+    private def fields: StructType =
+      child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    override def dataType: DataType = ArrayType(fields(0).dataType)
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = "mmr_order"
+
+    override protected def nullSafeEval(input: Any): Any = {
+      val pool = input.asInstanceOf[ArrayData]
+      val n = pool.numElements()
+      val vt = fields(2).dataType.asInstanceOf[ArrayType].elementType
+      val rows = Array.tabulate(n)(pool.getStruct(_, 4))
+      val ids = rows.map(_.get(0, fields(0).dataType))
+      val picked = new Array[Boolean](n)
+      val msim = Array.fill(n)(Double.NegativeInfinity)
+      def gt(a: Double, b: Double) = SQLOrderingUtil.compareDoubles(a, b) > 0
+      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var best = 0
+      while (out.length < k && best >= 0) {
+        best = -1
+        var bestS = 0.0
+        var e = 0
+        while (e < n) {
+          if (!picked(e)) {
+            val s = if (out.isEmpty) rows(e).getDouble(1)
+              else lambda * rows(e).getDouble(1) - (1.0 - lambda) * msim(e)
+            if (best < 0 || (!rows(e).isNullAt(1) &&
+                (rows(best).isNullAt(1) || gt(s, bestS)))) {
+              best = e; bestS = s
+            }
+          }
+          e += 1
+        }
+        if (best >= 0) {
+          out += ids(best)
+          var lo = best
+          while (lo > 0 && ids(lo - 1) == ids(best)) lo -= 1
+          var hi = best
+          while (hi + 1 < n && ids(hi + 1) == ids(best)) hi += 1
+          for (p <- lo to hi) picked(p) = true
+          if (out.length < k) {
+            for (e <- 0 until n if !picked(e); p <- lo to hi) {
+              val s = dot(rows(e).getArray(2), vt, rows(p).getArray(2), vt) /
+                (rows(e).getDouble(3) * rows(p).getDouble(3))
+              if (gt(s, msim(e))) msim(e) = s
+            }
+            // copies of one id (duplicate corpus rows) share one max
+            for (e <- 1 until n if ids(e) == ids(e - 1) && gt(msim(e - 1), msim(e)))
+              msim(e) = msim(e - 1)
+            for (e <- n - 2 to 0 by -1 if ids(e) == ids(e + 1)) msim(e) = msim(e + 1)
+          }
+        }
+      }
+      new GenericArrayData(out.toArray)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): MmrOrder =
+      copy(child = newChild)
   }
 
   /** argmin_j (|c_j|² − 2·sv·c_j) over a fixed codebook — the PQ
@@ -230,6 +313,9 @@ object VectorExpressions {
   def dot_product(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  private[graft] def mmr_order(pool: Column, k: Int, lambda: Double): Column =
+    ExpressionUtils.column(MmrOrder(ExpressionUtils.expression(pool), k, lambda))
 
   def pq_argmin(sv: Column, cents: Array[Array[Double]]): Column =
     ExpressionUtils.column(PqArgmin(

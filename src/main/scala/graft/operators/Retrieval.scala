@@ -256,41 +256,38 @@ object Retrieval {
     * yardstick, `ivfTopK` at scale. `corpus` supplies vectors for the
     * candidate-vs-candidate similarity.
     *
-    * Shape: the greedy chain is inherently sequential in k, but ONLY
-    * in k — each of the k-1 rounds is one distributed pass over all
-    * queries at once (anti-join picked, one keyed max over the
-    * candidate-pair frame, one per-query argmax window), so a million
-    * queries re-rank in the same k rounds as ten. The pairwise frame
-    * is |Q|*pool^2 rows — pool-bounded per query, never corpus-bounded
-    * — built once and reused by every round. Per-round frames are
-    * |Q|*k-sized; both ends of the loop pin with `localCheckpoint`
-    * (bounded class — see PERF.md materialization notes). Ties break
-    * to the smaller neighbor id everywhere, so the chain is
-    * deterministic end to end. */
+    * Shape: the greedy chain is sequential in k but depends only on
+    * one query's candidate pool, which the retriever already bounds.
+    * So it is ONE grouped pass: candidates left-join their vectors,
+    * group by query into an id-sorted pool, and
+    * [[graft.functions.VectorExpressions.MmrOrder]] runs the whole
+    * chain per query, keeping a running max-similarity per candidate
+    * that it folds against the newest pick only (k*pool dot products
+    * per query). Memory per group is one pool of vectors; the job
+    * count does not grow with k. Ties break to the smaller neighbor
+    * id everywhere, so the chain is deterministic end to end. */
   def mmrRerank(candidates: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, lambda: Double = 0.7): DataFrame = {
     require(k >= 1, s"mmrRerank needs k >= 1: $k")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"lambda must be in [0,1]: $lambda")
-    val cand = candidates.select(col("query_id"), col("neighbor_id"),
-      col("cosine").cast("double").as("rel")).localCheckpoint()
-    // candidate-vs-candidate cosine, |Q|*pool^2 rows, built ONCE —
-    // and only if a second round will read it (k=1 never does)
-    lazy val pair = {
-      val cv = corpus.select(col(idCol).as("__vid"), col(vecCol).as("__vec"),
-        Similarity.l2norm(col(vecCol)).as("__nrm"))
+    val cv = corpus.select(col(idCol).as("__vid"), col(vecCol).as("__vec"),
+      Similarity.l2norm(col(vecCol)).as("__nrm"))
+    val withVec = candidates.select(col("query_id"), col("neighbor_id"),
+        col("cosine").cast("double").as("rel"))
+      .join(cv, col("neighbor_id") === col("__vid"), "left")
+      // lazy pin: the coverage count fills it, the grouped pass reads it
+      .localCheckpoint(eager = false)
+    if (k >= 2) {
       // a candidate with no corpus vector (or a zero-norm one) would
-      // silently drop out of the pair frame and never receive a
-      // diversity penalty — its near-duplicates could all reach the
-      // top-k (review r11). Coverage is a CONTRACT, not a best-effort:
-      // fail with the count instead of treating the gap as orthogonal.
-      // One extra |Q|*pool-bounded aggregate, paid once per call.
-      // NULL-safe: a NULL embedding makes __nrm NULL, so a bare
-      // `!(__nrm > 0)` is NULL (not counted) while the pair-frame
-      // filter below still drops the row — exactly the escape this
-      // guard exists to close (review r12). coalesce pins it.
-      val uncovered = cand
-        .join(cv, cand("neighbor_id") === cv("__vid"), "left")
+      // have no defined similarity and never receive a diversity
+      // penalty — its near-duplicates could all reach the top-k.
+      // Coverage is a CONTRACT, not a best-effort: fail with the
+      // count instead of treating the gap as orthogonal. NULL-safe:
+      // a NULL embedding makes __nrm NULL, so a bare `!(__nrm > 0)`
+      // is NULL (not counted) — exactly the escape this guard exists
+      // to close. coalesce pins it.
+      val uncovered = withVec
         .filter(col("__vid").isNull ||
           !coalesce(col("__nrm") > 0, lit(false)))
         .count()
@@ -299,57 +296,14 @@ object Retrieval {
           s"vector in corpus.$idCol/$vecCol - diversity scores would be " +
           "silently wrong; fix the candidate/corpus join keys or filter " +
           "degenerate vectors upstream")
-      val withVec = cand.join(cv, cand("neighbor_id") === cv("__vid"))
-        .select(col("query_id"), col("neighbor_id"), col("__vec"), col("__nrm"))
-      val a = withVec.select(col("query_id"), col("neighbor_id").as("i"),
-        col("__vec").as("va"), col("__nrm").as("na"))
-      val b = withVec.select(col("query_id"), col("neighbor_id").as("j"),
-        col("__vec").as("vb"), col("__nrm").as("nb"))
-      a.join(b, Seq("query_id"))
-        .filter(col("i") =!= col("j"))
-        .filter(col("na") > 0 && col("nb") > 0)
-        .select(col("query_id"), col("i"), col("j"),
-          (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
-            .as("s"))
-        .localCheckpoint()
     }
-    val firstW = Window.partitionBy("query_id")
-      .orderBy(col("rel").desc, col("neighbor_id").asc)
-    var sel = cand.withColumn("__rn", row_number().over(firstW))
-      .filter(col("__rn") === 1)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("mmr_rank"))
-      .localCheckpoint()
-    var i = 2
-    var exhausted = false
-    while (i <= k && !exhausted) {
-      val remaining = cand.join(sel.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_anti")
-      val msim = pair.join(
-          sel.select(col("query_id"), col("neighbor_id").as("j")),
-          Seq("query_id", "j"))
-        .groupBy(col("query_id"), col("i"))
-        .agg(max(col("s")).as("msim"))
-        .withColumnRenamed("i", "neighbor_id")
-      val scored = remaining.join(msim, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("mmr", lit(lambda) * col("rel") -
-          lit(1.0 - lambda) * coalesce(col("msim"), lit(0.0)))
-      val pickW = Window.partitionBy("query_id")
-        .orderBy(col("mmr").desc, col("neighbor_id").asc)
-      val pick = scored.withColumn("__rn", row_number().over(pickW))
-        .filter(col("__rn") === 1)
-        .select(col("query_id"), col("neighbor_id"), lit(i).as("mmr_rank"))
-        .localCheckpoint()
-      // every pool exhausted -> the remaining rounds are all no-ops;
-      // the emptiness read is free on the just-materialized frame
-      if (pick.isEmpty) exhausted = true
-      // the union IS re-checkpointed each round, deliberately: an
-      // unmaterialized growing union re-plans per consumer (two per
-      // round) and the A/B measured it ~35% SLOWER than paying one
-      // bounded |Q|*r-row checkpoint job per round (r15 measurement;
-      // "save a job by skipping the checkpoint" was tried and lost)
-      else sel = sel.unionByName(pick).localCheckpoint()
-      i += 1
-    }
-    sel
+    withVec.groupBy("query_id")
+      .agg(sort_array(collect_list(struct(col("neighbor_id"), col("rel"),
+        col("__vec"), col("__nrm")))).as("__pool"))
+      .select(col("query_id"),
+        posexplode(graft.functions.VectorExpressions.mmr_order(
+          col("__pool"), k, lambda)))
+      .select(col("query_id"), col("col").as("neighbor_id"),
+        (col("pos") + 1).as("mmr_rank"))
   }
 }

@@ -879,12 +879,17 @@ object Similarity {
     val tag = pqIndexAlgo(books)
     Dedup.requireSigAlgo(index, tag, "IVF-PQ index",
       "re-encode with pqIndexStore under the current codebooks")
-    Dedup.requireSigAlgo(centroids, tag, "IVF-PQ centroid",
-      "re-encode with pqIndexStore under the current codebooks")
+    val storedCentroids = Dedup.requireSigAlgo(centroids, tag,
+      "IVF-PQ centroid", "re-encode with pqIndexStore under the current codebooks")
     // callers that know the store's centroid count pass it so the
     // full-probe configuration (nProbe >= nCentroids) plans as the
     // zero-exchange broadcast fan-out pqIvfTopK gets, instead of the
     // window shuffle (r15, advisor note); -1 = unknown, window path
+    // — a wrong hint would silently widen the probe to every centroid,
+    // so it must equal the count the tag check just read
+    require(nCentroids <= 0 || nCentroids == storedCentroids,
+      s"nCentroids = $nCentroids but the centroid frame has " +
+        s"$storedCentroids rows; pass the store's own count or -1")
     pqProbeRank(queries, index,
       centroids.select("cent_id", "cent_v", "cent_n"),
       idCol, vecCol, books, k, nProbe, nCentroids)
@@ -1002,13 +1007,15 @@ object Similarity {
     // NaN norms would pass a bare `> 0` gate (NaN orders greatest) and
     // then rank FIRST in the window branch (sim DESC) but LAST in the
     // top-1 argmax (min of -sim) — the branches must see the same
-    // candidate set, so NaN norms are dropped like zero norms (a NaN
-    // element makes the whole l2norm NaN, so this gates NaN sims too)
+    // candidate set, so only finite positive norms pass (a NaN or
+    // infinite element makes the whole l2norm NaN or +Infinity, and an
+    // infinite norm turns every sim into NaN, so this gates both)
+    def finitePositive(n: Column) = n > 0 && n < Double.PositiveInfinity
     val scored = df.select(keep: _*)
       .withColumn("n", l2norm(col(vecCol)))
-      .filter(col("n") > 0 && !isnan(col("n")))
+      .filter(finitePositive(col("n")))
       .crossJoin(broadcast(cent))
-      .filter(col("cent_n") > 0 && !isnan(col("cent_n")))
+      .filter(finitePositive(col("cent_n")))
       .withColumn("sim",
         dot(col(vecCol), col("cent_v")) / (col("n") * col("cent_n")))
     val out = Seq(col(idCol), col(vecCol), col("n"), col("cent_id")) ++

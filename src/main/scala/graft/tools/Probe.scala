@@ -1914,25 +1914,24 @@ object Probe {
     timed("man2 manifestDiff (both generations + diff)")(
       graft.SparkEntry.queries("man2_manifest_diff")(spark, dir).count())
 
-    // ---- MMR: wall must track |Q| x pool^2 (the pair frame), never
-    // the corpus — pool doubles ~ 4x pair rows
+    // ---- MMR: wall must track |Q| x k x pool (dot products inside
+    // each query's group), never the corpus
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     emb.count()
     for (pool <- Seq(25, 50, 100)) {
       val cand = graft.operators.Similarity.bruteForceTopK(
         emb.filter("vec_id < 10"), emb, "vec_id", "embedding", pool)
-      timed(s"mmr k=5 pool=$pool (pair frame ${10 * pool * pool} rows)")(
+      timed(s"mmr k=5 pool=$pool (${10 * 5 * pool} dot products)")(
         graft.operators.Retrieval.mmrRerank(
           cand, emb, "vec_id", "embedding", 5, 0.5).count())
     }
     timed("mmr2 over full-probe IVF candidates (pool=25)")(
       graft.SparkEntry.queries("mmr2_diversified_ivf")(spark, dir).count())
-    // make the |Q|*pool^2 term visible: 100 queries x pool 100 =
-    // 1M pair rows — the frame should now cost real time while the
-    // k-round loop stays fixed
+    // make the |Q| x pool term visible: 100 queries x pool 100 — the
+    // groups grow while the job count stays fixed
     val candBig = graft.operators.Similarity.bruteForceTopK(
       emb.filter("vec_id < 100"), emb, "vec_id", "embedding", 100)
-    timed("mmr k=5 |Q|=100 pool=100 (pair frame 1,000,000 rows)")(
+    timed("mmr k=5 |Q|=100 pool=100 (50,000 dot products)")(
       graft.operators.Retrieval.mmrRerank(
         candBig, emb, "vec_id", "embedding", 5, 0.5).count())
 

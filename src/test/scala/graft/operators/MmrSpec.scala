@@ -31,10 +31,6 @@ class MmrSpec extends SparkTestBase {
     val e = spark.read.parquet(sf() + "/embeddings.parquet")
     val cand = Similarity.bruteForceTopK(
       e.filter("vec_id < 5"), e, "vec_id", "embedding", 10)
-    val out = Retrieval.mmrRerank(cand, e, "vec_id", "embedding",
-        k = 4, lambda = 0.5)
-      .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
-
     val vecs = e.collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -50,21 +46,28 @@ class MmrSpec extends SparkTestBase {
     val pool = cand.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
       .groupBy(_._1)
-    pool.foreach { case (q, rows) =>
-      val rel = rows.map(r => r._2 -> r._3).toMap
-      var selected = Vector.empty[Long]
-      (1 to 4).foreach { _ =>
-        val remaining = rel.keys.filterNot(selected.contains).toSeq
-        val pick = remaining.minBy { c =>
-          val msim = if (selected.isEmpty) 0.0
-            else selected.map(sid => cos(vecs(c), vecs(sid))).max
-          (-(0.5 * rel(c) - 0.5 * msim), c)
+    for (lambda <- Seq(0.0, 0.5, 1.0)) {
+      val out = Retrieval.mmrRerank(cand, e, "vec_id", "embedding",
+          k = 4, lambda = lambda)
+        .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
+      pool.foreach { case (q, rows) =>
+        val rel = rows.map(r => r._2 -> r._3).toMap
+        var selected = Vector.empty[Long]
+        (1 to 4).foreach { _ =>
+          val remaining = rel.keys.filterNot(selected.contains).toSeq
+          // rank 1 is the plain top-rel pick at every lambda
+          val pick = remaining.minBy { c =>
+            val score = if (selected.isEmpty) rel(c)
+              else lambda * rel(c) -
+                (1.0 - lambda) * selected.map(sid => cos(vecs(c), vecs(sid))).max
+            (-score, c)
+          }
+          selected :+= pick
         }
-        selected :+= pick
-      }
-      selected.zipWithIndex.foreach { case (nid, i) =>
-        assert(out((q, i + 1)) == nid,
-          s"query $q rank ${i + 1}: engine ${out((q, i + 1))} vs reference $nid")
+        selected.zipWithIndex.foreach { case (nid, i) =>
+          assert(out((q, i + 1)) == nid, s"lambda $lambda query $q rank " +
+            s"${i + 1}: engine ${out((q, i + 1))} vs reference $nid")
+        }
       }
     }
   }
@@ -168,5 +171,68 @@ class MmrSpec extends SparkTestBase {
     val r1 = Retrieval.mmrRerank(cand, corpus, "vec_id", "embedding",
       k = 1, lambda = 0.5).collect()
     assert(r1.length == 1 && r1.head.getLong(1) == 1L)
+  }
+
+  test("NaN and NULL relevance rank as Spark's window orders them") {
+    // desc with NaN greatest and NULL last: the NaN candidate is
+    // picked first (its mmr stays NaN), the NULL one last
+    val corpus = Seq(
+      (1L, Array(1.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f)),
+      (3L, Array(1.0f, 1.0f)),
+      (4L, Array(0.6f, 0.8f)))
+      .toDF("vec_id", "embedding")
+    val cand = Seq[(Long, Long, java.lang.Double)]((100L, 1L, 0.9),
+        (100L, 2L, Double.NaN), (100L, 3L, null), (100L, 4L, 0.5))
+      .toDF("query_id", "neighbor_id", "cosine")
+    val out = Retrieval.mmrRerank(cand, corpus, "vec_id", "embedding",
+        k = 4, lambda = 0.5)
+      .orderBy("mmr_rank").collect().map(r => (r.getLong(1), r.getInt(2)))
+    // after 2: mmr(1) = 0.45 - 0.5*0 beats mmr(4) = 0.25 - 0.5*0.8
+    assert(out.toSeq == Seq((2L, 1), (1L, 2), (4L, 3), (3L, 4)))
+  }
+
+  test("duplicate candidate rows and duplicate corpus ids: each id " +
+      "ranks once, penalized by its closest copy") {
+    // id 2 has two corpus vectors; its penalty is the max over both
+    // (the second is nearly id 1), so it ranks last, not second
+    val corpus = Seq(
+      (1L, Array(1.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f)),
+      (2L, Array(1.0f, 0.1f)),
+      (3L, Array(0.7f, 0.7f)),
+      (4L, Array(0.1f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val cand = Seq((100L, 1L, 0.9), (100L, 2L, 0.8), (100L, 3L, 0.7),
+        (100L, 3L, 0.7), (100L, 4L, 0.6))
+      .toDF("query_id", "neighbor_id", "cosine")
+    val out = Retrieval.mmrRerank(cand, corpus, "vec_id", "embedding",
+        k = 5, lambda = 0.5)
+      .orderBy("mmr_rank").collect().map(r => (r.getLong(1), r.getInt(2)))
+    assert(out.toSeq == Seq((1L, 1), (4L, 2), (3L, 3), (2L, 4)))
+  }
+
+  test("the job count does not grow with k") {
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+    val cand = Similarity.bruteForceTopK(
+      e.filter("vec_id < 5"), e, "vec_id", "embedding", 10).localCheckpoint()
+    def jobs(k: Int): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+      }
+      ListenerBridge.drain(sc, 30000)
+      sc.addSparkListener(l)
+      try {
+        Retrieval.mmrRerank(cand, e, "vec_id", "embedding", k, 0.5).collect()
+        ListenerBridge.drain(sc, 30000)
+      } finally sc.removeSparkListener(l)
+      n.get
+    }
+    val (j3, j8) = (jobs(3), jobs(8))
+    assert(j3 > 0 && j3 == j8, s"k=3 ran $j3 jobs, k=8 ran $j8")
   }
 }

@@ -769,21 +769,54 @@ class SimilaritySpec extends SparkTestBase {
       (0L, Seq(1f, 0f, 0f)),
       (1L, Seq(0f, 1f, 0f)),
       (2L, Seq(0.9f, 0.1f, 0f)),
-      (3L, Seq(Float.NaN, 1f, 0f))).toDF("id", "v")
+      (3L, Seq(Float.NaN, 1f, 0f)),
+      // an infinite element makes the norm +Infinity and every sim NaN
+      (4L, Seq(Float.PositiveInfinity, 0f, 0f))).toDF("id", "v")
     val books = Similarity.pqTrain(
       withNaN.filter("id < 3"), "id", "v", m = 1, k = 2, maxIter = 0)
     // top-1 argmax branch (corpus-side assignment)
     val (index, _) =
       Similarity.pqIndexStore(withNaN, "id", "v", books, nCentroids = 2)
-    assert(!index.select("neighbor_id").collect().map(_.getLong(0))
-      .contains(3L))
-    // window branch (reduced multi-probe): the NaN row is neither a
-    // query nor a neighbor
+    val indexed = index.select("neighbor_id").collect().map(_.getLong(0)).toSet
+    assert(indexed == Set(0L, 1L, 2L))
+    // window branch (reduced multi-probe): the non-finite rows are
+    // neither queries nor neighbors
     val probed = Similarity.ivfTopK(withNaN, withNaN, "id", "v", 3,
         nCentroids = 3, nProbe = 2)
       .select("query_id", "neighbor_id").collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
-    assert(!probed.contains(3L) && probed.nonEmpty)
+    assert(probed == indexed)
+    // a non-finite CENTROID attracts nothing in either branch: ids 3
+    // and 4 are among the 5 smallest, so they become centroids here
+    val (index5, _) =
+      Similarity.pqIndexStore(withNaN, "id", "v", books, nCentroids = 5)
+    val rows5 = index5.select("neighbor_id", "cent_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows5.map(_._1).toSet == indexed &&
+      rows5.forall(r => indexed.contains(r._2)))
+    val probed5 = Similarity.ivfTopK(withNaN, withNaN, "id", "v", 3,
+        nCentroids = 5, nProbe = 2)
+      .select("query_id", "neighbor_id").collect()
+      .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+    assert(probed5 == indexed)
+  }
+
+  test("pqIvfProbeIndex refuses a centroid-count hint the store contradicts") {
+    // a hint smaller than the real count would plan the full-probe
+    // fan-out for nProbe >= hint and silently probe every centroid
+    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    val books = Similarity.pqTrain(e, "vec_id", "embedding",
+      m = 4, k = 4, maxIter = 1)
+    val (index, cents) =
+      Similarity.pqIndexStore(e, "vec_id", "embedding", books,
+        nCentroids = 8)
+    val q = e.filter("vec_id < 5")
+    val err = intercept[IllegalArgumentException] {
+      Similarity.pqIvfProbeIndex(q, index, cents,
+        "vec_id", "embedding", books, 5, nProbe = 4, nCentroids = 4)
+    }
+    assert(err.getMessage.contains("nCentroids = 4") &&
+      err.getMessage.contains("8 rows"), err.getMessage)
   }
 
   test("probe-store full probe with a known centroid count drops the rank window") {
